@@ -7,8 +7,9 @@
 - ``oracle_sql()``: DuckDB twins, column-aliased identically.
 
 The real engine lives in ``ba_gepris_crawler_spark``; the crawl itself
-(synthetic multi-host site, politeness, bloom URL-seen, snapshot resume) is
-exercised end-to-end in ``tests/`` against a straight-line golden simulator.
+(synthetic multi-host site, politeness, bloom-gated exact URL-seen,
+snapshot resume) is exercised end-to-end in ``tests/`` against a
+straight-line golden simulator.
 """
 
 from __future__ import annotations

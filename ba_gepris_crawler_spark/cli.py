@@ -52,10 +52,6 @@ def _settings(args: argparse.Namespace) -> CrawlSettings:
             max_in_flight=args.in_flight,
         ),
         fetch_format=getattr(args, "fetch_format", "html"),
-        seen_filter=getattr(args, "seen_filter", "bloom"),
-        cuckoo_mode=getattr(args, "cuckoo_mode", "auto"),
-        cuckoo_shards=getattr(args, "cuckoo_shards", None),
-        span_transport=getattr(args, "span_transport", "json"),
         circuit_breaker={} if getattr(args, "circuit_breaker", False) else None,
     )
 
@@ -66,7 +62,9 @@ def _rebuild_from_config(
     """Persisted config.json -> (site, settings). A crawl folder is
     self-describing: replaying anything else would 404 every frontier URL
     and poison the seen set. Raises ValueError/TypeError/KeyError on a
-    hand-edited/corrupt config (callers map to the JSON-error contract)."""
+    hand-edited/corrupt config (callers map to the JSON-error contract).
+    Keys this engine no longer reads (e.g. the retired seen-gate and span
+    wire-format choices of older stores) are ignored."""
     fb = fallback or CrawlSettings()
     sc = dict(cfg["site"])
     sc["hosts"] = tuple(sc["hosts"])
@@ -79,10 +77,6 @@ def _rebuild_from_config(
         n_buckets=cfg.get("n_buckets", fb.n_buckets),
         politeness=PolitenessConfig(**pol),
         fetch_format=cfg.get("fetch_format", fb.fetch_format),
-        seen_filter=cfg.get("seen_filter", fb.seen_filter),
-        cuckoo_mode=cfg.get("cuckoo_mode", fb.cuckoo_mode),
-        cuckoo_shards=cfg.get("cuckoo_shards", fb.cuckoo_shards),
-        span_transport=cfg.get("span_transport", fb.span_transport),
         circuit_breaker=_cb_from(cfg.get("circuit_breaker", fb.circuit_breaker)),
     )
     return site, settings
@@ -142,31 +136,6 @@ def main(argv: list[str] | None = None) -> int:
         c.add_argument(
             "--fetch-format", dest="fetch_format", choices=["html", "json"], default="html",
             help="html = pre-parsed spans; json = S7 JSON-API bodies parsed in-plan",
-        )
-        c.add_argument(
-            "--span-transport", dest="span_transport", choices=["json", "arrow", "arrays"],
-            default="json",
-            help="how html-mode spans cross the Arrow boundary: json string + "
-                 "JVM from_json (default, ~2x faster), pandas list-of-dicts "
-                 "(arrow), or four parallel primitive arrays zipped in-plan "
-                 "(arrays)",
-        )
-        c.add_argument(
-            "--seen-filter", dest="seen_filter", choices=["bloom", "cuckoo"], default="bloom",
-            help="URL-seen admission gate: OR-merged bloom bitmap (persisted) "
-                 "or cuckoo shards (deletable fingerprints; rebuilt on resume)",
-        )
-        c.add_argument(
-            "--cuckoo-mode", dest="cuckoo_mode", choices=["auto", "driver", "distributed"],
-            default="auto",
-            help="cuckoo shard regime: driver dict (small filters) or executor-"
-                 "resident shard table (never collects the seen set); auto picks "
-                 "by estimated table bytes",
-        )
-        c.add_argument(
-            "--cuckoo-shards", dest="cuckoo_shards", type=int, default=None,
-            help="cuckoo shard count (default: auto-sized so one shard's "
-                 "table stays <= 32 MiB at the expected seen-set size)",
         )
         c.add_argument(
             "--robots-file", dest="robots_file", default=None,
@@ -300,14 +269,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"expired": expired, "orphans_removed": removed, "dry_run": args.dry_run}))
         return 0
 
-    if args.cmd == "stream-crawl" and getattr(args, "seen_filter", "bloom") == "cuckoo":
-        # pure-argparse validation: fail before paying JVM/session startup.
-        # The stream's bloom gate is derived state rebuilt from committed
-        # batch dirs; the cuckoo shards' deletable fingerprints have no
-        # stream analog yet — fail loudly instead of silently downgrading.
-        print(json.dumps({"error": "--seen-filter cuckoo is batch-engine only; "
-                                   "stream-crawl supports the bloom gate + exact backstop"}))
-        return 2
     if args.cmd == "stream-crawl" and getattr(args, "bootstrap_robots", False):
         # silently ignoring the flag would crawl without the politeness
         # the user asked the site for — refuse pre-JVM instead
@@ -400,7 +361,7 @@ def main(argv: list[str] | None = None) -> int:
         sc = StreamingCrawl(
             spark, site, args.root, politeness=settings.politeness,
             n_buckets=settings.n_buckets, fetch_format=settings.fetch_format,
-            seen_filter=settings.seen_filter, budgets_df=stream_budgets,
+            budgets_df=stream_budgets,
         )
         if sc.needs_seed():
             sc.seed()
@@ -427,10 +388,6 @@ def main(argv: list[str] | None = None) -> int:
                     "politeness": asdict(settings.politeness),
                     "n_buckets": settings.n_buckets,
                     "fetch_format": settings.fetch_format,
-                    "seen_filter": settings.seen_filter,
-                    "cuckoo_mode": settings.cuckoo_mode,
-                    "cuckoo_shards": settings.cuckoo_shards,
-                    "span_transport": settings.span_transport,
                     "circuit_breaker": settings.circuit_breaker,
                     "bootstrap_robots": bool(getattr(args, "bootstrap_robots", False)),
                     "robots_file": args.robots_file,

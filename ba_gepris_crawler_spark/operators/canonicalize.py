@@ -5,9 +5,10 @@ collapse empty query ('?' tail). Query-parameter reordering is deliberately
 NOT done (the reference treats URLs literally; GEPRIS URLs are
 crawler-built and already canonical — CrawledResourceDetailDataGraph.scala:27).
 
-url_hash = xxhash64(canonical_url): the 64-bit key used by the URL-seen
-bloom shards and the exact-seen table (north rule: canonicalize -> xxhash64
--> per-partition filter shards).
+url_hash = xxhash64(canonical_url): the 64-bit key stored in the url_seen
+table. The URL-seen bloom (operators/url_seen.py) probes the same
+xxhash64 of the url plus a salted second hash (north rule: canonicalize ->
+xxhash64 -> per-partition filter shards).
 """
 
 from __future__ import annotations

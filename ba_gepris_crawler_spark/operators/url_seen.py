@@ -1,20 +1,29 @@
-"""URL-seen filter: partitioned bloom shards + exact anti-join backstop.
+"""URL-seen filter: an incremental bloom gate in front of an exact anti-join.
 
 Pipeline (north rule): canonicalize -> xxhash64 -> per-partition bloom
-shards, merged via treeReduce (the one deliberate drop below the DataFrame
-API, SURVEY.md §4.2); membership tests run vectorized (numpy over Arrow
-batches). The bloom is an ADMISSION GATE only: rows the bloom rejects are
-*definitely new* and skip the expensive exact join entirely; rows the bloom
-admits ("maybe seen") go through an exact `left_anti` join against the
-url_seen table, so the final seen-set semantics are exact — matching the
-reference's exact CSV set-diff (CrawlResourceDetailsGraph.scala:47-53)
-while scaling: at a 10^10-URL frontier the exact join's left side shrinks
-by (1 - dup_rate - fpp), and the shards themselves stay executor-resident.
+shards, collected and OR-merged (or via treeReduce for giant bitmaps — the
+one deliberate drop below the DataFrame API, SURVEY.md §4.2); membership
+tests run vectorized (numpy over Arrow batches).
 
-Sizing: m = ceil(-n ln(fpp) / ln(2)^2) bits, k = max(1, round(m/n ln 2)).
-At 10^10 URLs / 1% fpp this is ~12 GB of bits — sharded by url_hash range
-across executors in a real deployment; the sandbox build keeps one merged
-bitmap broadcast to all workers (same code path, fewer shards).
+Membership is always decided by the exact `left_anti` join against the
+url_seen table — the reference's exact CSV set-diff
+(CrawlResourceDetailsGraph.scala:47-53) — so the bloom never changes a
+result. `new_urls` flags each frontier row `_maybe_seen` in ONE probe pass
+and folds the flag into the anti-join's residual condition: a
+bloom-negative row can never match, so it passes straight through.
+
+What the gate does NOT save: the anti-join still takes every frontier row
+and reads (broadcasts or shuffles) the whole seen side, so a negative
+skips only the residual check, not the exact probe. A filter pays off
+only when its negatives skip that probe (SIGMOD'23 learned cuckoo filter,
+PAPERS.md); here the gate costs one mapInPandas pass per round. What it
+does provide is the north rule's persisted, incrementally maintained
+filter — each round ORs its delta shard in, the bitmap is saved per round
+(SnapshotStore.save_bloom) and its (m, k, version) is the manifest's
+`bloom` counter.
+
+Sizing: m = ceil(-n ln(fpp) / ln(2)^2) bits, k = max(1, round(m/n ln 2)),
+with n = max(4 x seen_total, BLOOM_EXPECTED_ITEMS) and fpp = BLOOM_FPP.
 """
 
 from __future__ import annotations
@@ -29,6 +38,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# target false-positive rate and the minimum design capacity (m/k are fixed
+# at build; the round loop rebuilds at 4x the seen set once saturated)
+BLOOM_FPP = 0.01
+BLOOM_EXPECTED_ITEMS = 1 << 17
+
 
 @dataclass
 class BloomFilterModel:
@@ -38,7 +52,7 @@ class BloomFilterModel:
     n_items: int
     version: int = 0
     # lazily-created broadcast of (bits, m, k) — ONE per model instance,
-    # reused across every split_by_bloom call (the stream probes the same
+    # reused across every flag_by_bloom call (the stream probes the same
     # model many times per wave) and released via unpersist_broadcast()
     # when the engine replaces the model. Without this, every round/batch
     # broadcast a fresh bitmap-sized copy that was never cleaned up:
@@ -102,7 +116,7 @@ def build_bloom(
     seen: DataFrame,
     url_col: str = "url",
     expected_items: int | None = None,
-    fpp: float = 0.01,
+    fpp: float = BLOOM_FPP,
     version: int = 0,
     m: int | None = None,
     k: int | None = None,
@@ -217,12 +231,11 @@ def flag_by_bloom(
 ) -> DataFrame:
     """Frontier + boolean `_maybe_seen`: bloom-negative rows are provably
     unseen (no false negatives); positives need the exact anti-join
-    backstop. ONE probe pass — the tuple-returning split filters this
-    frame twice, and Spark re-runs the unshared subtree per branch: the
-    whole frontier lineage (a groupBy) plus the Arrow/numpy membership
-    pass executed twice per round (review r5 ops #3). new_urls consumes
-    the flagged frame directly. Membership test is Arrow-batched numpy —
-    no per-row Python."""
+    backstop. ONE probe pass — a two-frame split would filter this frame
+    twice, and Spark re-runs the unshared subtree per branch: the whole
+    frontier lineage (a groupBy) plus the Arrow/numpy membership pass
+    (review r5 ops #3). new_urls consumes the flagged frame directly.
+    Membership test is Arrow-batched numpy — no per-row Python."""
     spark = frontier.sparkSession
     bc = bloom.broadcast(spark)  # one broadcast per model, not per call
     hashed = _hash_cols(frontier, url_col)
@@ -239,31 +252,15 @@ def flag_by_bloom(
     return hashed.mapInPandas(test, schema=out_schema).drop("_h1", "_h2")
 
 
-def split_by_bloom(
-    frontier: DataFrame, bloom: BloomFilterModel, url_col: str = "url"
-) -> tuple[DataFrame, DataFrame]:
-    """(definitely_new, maybe_seen) tuple view of flag_by_bloom — for
-    callers that genuinely need the two frames; each filter re-runs the
-    probe subtree, so the hot path (new_urls) uses the flagged frame."""
-    flagged = flag_by_bloom(frontier, bloom, url_col)
-    return (
-        flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen"),
-        flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen"),
-    )
-
-
 def new_urls(
     frontier: DataFrame,
     url_seen: DataFrame,
     bloom: BloomFilterModel | None = None,
     url_col: str = "url",
-    splitter=None,
 ) -> DataFrame:
     """J1, THE core crawl operator: frontier minus seen. Exact semantics
-    always; an admission gate (when provided) pre-gates the exact join —
-    either `bloom` or an explicit `splitter(frontier)` returning a frame
-    flagged with `_maybe_seen` (cuckoo: operators/cuckoo.flag_by_cuckoo)
-    or, legacy, a (definitely_new, maybe_seen) tuple.
+    always; a `bloom` (when provided) flags rows in one probe pass that
+    the exact anti-join then folds into its residual condition.
 
     `url_col` names the URL column in BOTH frames — the seen side is no
     longer hard-coded to "url" (a non-default url_col either crashed or
@@ -273,19 +270,13 @@ def new_urls(
     # a dropDuplicates here would full-shuffle the largest table in the
     # system (10^9+ rows) every round for identical join results
     seen_keys = url_seen.select(F.col(url_col))
-    if splitter is None and bloom is not None:
-        splitter = lambda f: flag_by_bloom(f, bloom, url_col)  # noqa: E731
-    if splitter is None:
+    if bloom is None:
         return frontier.join(seen_keys, url_col, "left_anti")
-    res = splitter(frontier)
-    if isinstance(res, tuple):  # legacy two-frame splitters
-        definitely_new, maybe_seen = res
-        return definitely_new.unionByName(maybe_seen.join(seen_keys, url_col, "left_anti"))
     # flagged frame, ONE pass: the anti-join's residual condition applies
     # the exact backstop only to _maybe_seen rows — flagged-false rows
-    # match nothing and pass straight through, without the two-branch
+    # match nothing and pass straight through, without a two-branch
     # union re-running the frontier lineage + probe per branch
-    f = res.alias("_f")
+    f = flag_by_bloom(frontier, bloom, url_col).alias("_f")
     s = seen_keys.alias("_s")
     cond = (F.col(f"_f.{url_col}") == F.col(f"_s.{url_col}")) & F.col("_f._maybe_seen")
     return f.join(s, cond, "left_anti").drop("_maybe_seen")

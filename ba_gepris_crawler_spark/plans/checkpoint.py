@@ -68,7 +68,7 @@ class SnapshotStore:
     @staticmethod
     def _write_json_atomic(path: Path, obj: dict, indent: int | None = 2) -> None:
         """The store's single commit primitive: tmp file + os.replace.
-        Every manifest kind (round, compaction, config, bloom/cuckoo meta)
+        Every manifest kind (round, compaction, config, bloom meta)
         must go through here so the atomicity discipline can't drift."""
         tmp = path.with_suffix(path.suffix + ".tmp")
         tmp.write_text(json.dumps(obj, indent=indent))
@@ -157,7 +157,7 @@ class SnapshotStore:
         d = self.root / "bloom"
         d.mkdir(parents=True, exist_ok=True)
         # NEVER overwrite the bits file latest.json currently points at
-        # (the save_cuckoo generation-dir discipline): replacing the live
+        # (one fresh generation file per save): replacing the live
         # slot in place and THEN swapping the meta leaves a crash window
         # where new bits (possibly a resized m) pair with stale meta — the
         # round tag still matches after a --from-round rewind, so
@@ -196,53 +196,6 @@ class SnapshotStore:
         if len(bits) * 8 != meta.get("m", len(bits) * 8):
             return None  # torn/mismatched bitmap: rebuild, never mis-probe
         return bits, meta
-
-    # -- cuckoo shard-table persistence (table regime only) --------------
-    def save_cuckoo(self, rnd: int, rows_df: DataFrame, meta: dict) -> None:
-        """Persist the executor-resident cuckoo shard table as of round
-        `rnd`. Unlike the bloom's driver-held bitmap, the shards are a
-        DataFrame and are written by the EXECUTORS (parquet, one row per
-        shard) — the driver never holds them. Manifest-first visibility:
-        data dir written, then the meta json atomically swapped to point
-        at it; superseded snapshot dirs are pruned only after the swap."""
-        import shutil as _shutil
-
-        d = self.root / "cuckoo"
-        d.mkdir(parents=True, exist_ok=True)
-        # NEVER overwrite the dir latest.json currently points at: a
-        # rewound crawl (resume --from-round) re-saves the same round tag,
-        # and an in-place overwrite that crashes mid-write would leave the
-        # manifest referencing a half-written dir. Fresh generation dir,
-        # then the atomic manifest swap, then prune superseded dirs.
-        gen = 0
-        while (data := d / f"r{rnd}-g{gen}").exists():
-            gen += 1
-        rows_df.write.mode("error").parquet(str(data))
-        self._write_json_atomic(
-            d / "latest.json", {"round": rnd, "path": data.name, **meta},
-            indent=None,
-        )
-        for p in d.iterdir():
-            if p.is_dir() and p.name != data.name:
-                _shutil.rmtree(p, ignore_errors=True)
-
-    def load_cuckoo(self, rnd: int) -> tuple[str, dict] | None:
-        """(parquet path, meta) iff a snapshot tagged exactly round `rnd`
-        exists; None otherwise (caller rebuilds — the gate is admission-
-        only, correctness never depends on it)."""
-        meta_p = self.root / "cuckoo" / "latest.json"
-        if not meta_p.exists():
-            return None
-        meta = json.loads(meta_p.read_text())
-        if meta.get("round") != rnd:
-            return None
-        data = self.root / "cuckoo" / meta.get("path", "")
-        # _SUCCESS guards a torn write (legacy in-place snapshots could be
-        # half-written); the gate is admission-only, so a missing/corrupt
-        # snapshot means rebuild, never a failed crawl
-        if not data.is_dir() or not (data / "_SUCCESS").exists():
-            return None
-        return str(data), meta
 
     # -- deliberate rewind (App.scala:39-43 stage/round override analog) --
     def truncate_after(self, rnd: int) -> list[int]:

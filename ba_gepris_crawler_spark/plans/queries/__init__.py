@@ -108,7 +108,6 @@ _CANONICAL_ORDER = [
     "mm_interleave_stats",
     "text_inverted_index",
     "crawl_trap_filter",
-    "crawl_cuckoo_gate",
     "crawl_catalog_null_guard",
     "crawl_redirect_resolve",
     "crawl_sitemap_parse",
@@ -123,48 +122,48 @@ _CANONICAL_ORDER = [
     "crawl_refetch_lifecycle",
 ]
 
-# Round-5 rotation: the 23 names rowed only in round 3 (the round-4 head
-# displaced them past the 50-row cap) plus the brand-new round-5 queries
-# (cuckoo gate, catalog null guard). Every other registry query has a
-# green round-4 row, so after this rotation every query has a driver row
-# at most two rounds old.
+# Rotation after round 5: the 36 names with a CORRECTNESS_r04 row but none
+# in CORRECTNESS_r05 (the round-5 head displaced them past the 50-row cap),
+# in their round-4 row order. Every other registry query has a green
+# round-5 row, so after this rotation every query has a correctness row at
+# most two rounds old.
 _HEAD_FIRST = [
-    "crawl_revalidate_etag",
-    "crawl_current_version_view",
-    "crawl_error_retry_schedule",
-    "crawl_circuit_breaker",
-    "dq_staleness",
-    "crawl_refetch_lifecycle",
-    "crawl_cuckoo_gate",
-    "crawl_catalog_null_guard",
-    "crawl_redirect_resolve",
-    "crawl_sitemap_parse",
-    "crawl_recrawl_schedule",
-    "crawl_seed_url_recognizer",
-    "crawl_robots_sitemap_discovery",
-    "dedup_clusters",
-    "emb_cosine_topk",
-    "emb_ivf_assign",
-    "emb_lsh_bucket_pairs",
-    "emb_lsh_near_dups",
-    "emb_neardup_pairs",
-    "events_tumbling_window",
-    "events_sessionize",
-    "events_rolling_avg",
-    "events_asof_join",
-    "events_range_join",
-    "mm_binary_meta",
-    "dq_taxonomy_consistency",
-    "dq_source_evidence_coverage",
-    "dq_sample_audit",
-    "dq_hash_sample",
-    "rel_dictionary_encode",
-    "crawl_span_adjacency",
-    "crawl_address_assembly",
-    "crawl_parent_hierarchy",
-    "tpch_stats_summary",
-    "tpch_rollup_revenue",
-    "tpch_pivot_status_by_priority",
+    "crawl_budget_relation_cut",
+    "crawl_robots_distributed_parse",
+    "crawl_robots_allow_filter",
+    "tpch_monthly_orders",
+    "rel_string_functions",
+    "tpch_cube_counts",
+    "rel_intersect_except",
+    "events_first_last_nav",
+    "text_bigram_topk",
+    "text_lm_score",
+    "mm_extract_features",
+    "mm_frame_sample",
+    "crawl_json_api_parse",
+    "crawl_robots_filter",
+    "dq_url_liveness",
+    "crawl_cookie_parse",
+    "crawl_robots_txt_parse",
+    "crawl_crawl_delay_budget",
+    "emb_ivf_probe_topk",
+    "mm_caption_align",
+    "mm_interleave_stats",
+    "text_inverted_index",
+    "crawl_trap_filter",
+    "dq_year_validity",
+    "tpch_q1_pricing_summary",
+    "tpch_q3_top10_revenue",
+    "tpch_top_customers_per_nation",
+    "tpch_region_revenue",
+    "text_token_stats",
+    "text_quality_score",
+    "text_lang_id",
+    "text_fingerprint",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_simhash",
+    "dedup_minhash_lsh",
 ]
 
 assert len(_CANONICAL_ORDER) == len(set(_CANONICAL_ORDER)), "dup in _CANONICAL_ORDER"

@@ -4,9 +4,9 @@ source, with discovery feeding back into it.
 The batch engine (plans/round_loop.py) models the reference's stage loop as
 discrete rounds; this module is the forward path the north rule's streaming
 mandate points at: the frontier directory is a file-source STREAM, each
-micro-batch runs the same operators (seen anti-join — optionally pre-gated
-by the incremental bloom, seen_filter='bloom' -> politeness schedule ->
-Arrow fetch -> documents/url_seen append), and discovered URLs
+micro-batch runs the same operators (seen anti-join pre-gated by the
+incremental bloom -> politeness schedule -> Arrow fetch ->
+documents/url_seen append), and discovered URLs
 are written BACK into the frontier directory, so the stream feeds itself
 until the reachable site is exhausted.
 
@@ -42,12 +42,7 @@ from pyspark.sql import functions as F
 from ba_gepris_crawler_spark.operators import frontier as FR
 from ba_gepris_crawler_spark.operators import url_seen as US
 from ba_gepris_crawler_spark.operators.cookies import CookieJar
-from ba_gepris_crawler_spark.operators.fetch import (
-    fetch_pages,
-    needs_span_parse,
-    parse_json_spans,
-    to_documents,
-)
+from ba_gepris_crawler_spark.operators.fetch import fetch_pages, to_documents
 from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig, schedule_round
 from ba_gepris_crawler_spark.schema import FRONTIER_SCHEMA
 from ba_gepris_crawler_spark.sources.synthetic_site import SiteConfig
@@ -64,18 +59,6 @@ class StreamingCrawl:
     # CrawlSettings.fetch_format; json bodies parse in-plan to the same
     # spans, so both modes write byte-equal documents
     fetch_format: str = "html"
-    # "exact" or "bloom": with "bloom" the per-batch seen anti-join is
-    # pre-gated by the SAME incremental bloom the batch engine maintains
-    # (bloom-negative URLs are provably unseen and bypass the join; the
-    # exact anti-join remains the backstop, so results are identical).
-    # The bitmap is DERIVED state rebuilt from committed url_seen batch
-    # dirs — a crash or process restart just re-ORs them, and a dir is
-    # only inserted once its commit marker exists, so the no-false-
-    # negatives guarantee holds for every URL the gate can be asked about
-    seen_filter: str = "exact"
-    # initial bloom sizing (m/k are fixed at first build; outgrowing it
-    # only degrades the pre-gate's selectivity, never correctness)
-    bloom_expected_items: int = 1_000_000
     # optional per-host budgets RELATION (host, budget int[, rate double])
     # — the web-scale Crawl-delay form (politeness.crawl_delay_budgets),
     # same semantics as CrawlEngine.budgets_df: joined into every batch's
@@ -149,19 +132,21 @@ class StreamingCrawl:
 
     def _bloom_gate(self) -> US.BloomFilterModel | None:
         """Incrementally OR committed url_seen batch dirs into the bloom
-        (the stream analog of round_loop's update_bloom-per-round). Only
-        dirs whose commit marker exists are inserted, and the instance
-        tracks which, so each delta is scanned exactly once per process
-        lifetime; a restart rebuilds from all committed dirs."""
-        if self.seen_filter != "bloom":
-            return None
+        (the stream analog of round_loop's update_bloom-per-round) that
+        pre-gates the per-batch seen anti-join; the exact anti-join stays
+        the backstop, so results match the batch engine. The bitmap is
+        DERIVED state: only dirs whose commit marker exists are inserted
+        (so there are no false negatives for any URL the gate is asked
+        about), and the instance tracks which, so each delta is scanned
+        exactly once per process lifetime; a restart rebuilds from all
+        committed dirs."""
         committed = [p for p in sorted((self.root / "url_seen").glob("b*"))
                      if self._committed(p.name)]
         fresh = [p for p in committed if p.name not in self._bloom_dirs]
         if fresh:
             delta = self.spark.read.parquet(*[str(p) for p in fresh]).select("url")
             if self._bloom is None:
-                self._bloom = US.build_bloom(delta, expected_items=self.bloom_expected_items)
+                self._bloom = US.build_bloom(delta, expected_items=US.BLOOM_EXPECTED_ITEMS)
             else:
                 old = self._bloom
                 self._bloom = US.update_bloom(old, delta)
@@ -229,8 +214,6 @@ class StreamingCrawl:
             session_token=token, epoch=epoch, fmt=self.fetch_format,
             host_rates=self.politeness.host_rates, transport=self.transport,
         )
-        if needs_span_parse(fetched):  # json API mode or json span transport
-            fetched = parse_json_spans(fetched)
         docs = to_documents(fetched, batch_id, keep_errors=True)
         docs.write.mode("overwrite").parquet(self._out("documents", batch_id))
         stored = self.spark.read.parquet(self._out("documents", batch_id))

@@ -33,8 +33,6 @@ def _settings() -> CrawlSettings:
     return CrawlSettings(
         n_buckets=8,
         politeness=PolitenessConfig(per_host_rate=BUDGET, round_seconds=1.0, max_in_flight=5),
-        bloom_fpp=0.01,
-        use_bloom=True,
         extract=False,  # extraction correctness is covered in test_extraction
     )
 
@@ -330,46 +328,49 @@ def test_json_api_crawl_equals_html_crawl(spark, crawl_cfg, tmp_path_factory, ru
     assert da == dj  # span sequences byte-equal across fetch formats
 
 
-@pytest.mark.parametrize("transport_name", ["arrow", "arrays"])
-def test_span_transports_equal_json_transport(spark, crawl_cfg, tmp_path_factory, run, transport_name):
-    """span_transport is a wire-format detail of the html fetch path: the
-    'arrow' transport (list-of-dicts through pandas) and the 'arrays'
-    transport (four parallel primitive arrays zipped in-plan) must produce
-    the IDENTICAL crawl log and documents table as the default 'json'
-    transport (one string per page + JVM from_json) the `run` fixture used."""
-    store_a, _, _ = run
-    store_t = SnapshotStore(spark, tmp_path_factory.mktemp(f"crawl_{transport_name}"))
-    settings = _settings()
-    settings.span_transport = transport_name
-    manifests = CrawlEngine(spark, crawl_cfg, store_t, settings).run(max_rounds=30)
-    assert manifests[-1]["counters"]["done"]
+def test_round_phase_secs_labels(spark, crawl_cfg, tmp_path, monkeypatch):
+    """SPARK_GRAFT_TIMING=1 records one phase per interval of run_round,
+    each named after the work that interval does, in execution order."""
+    monkeypatch.setenv("SPARK_GRAFT_TIMING", "1")
+    store = SnapshotStore(spark, tmp_path / "timed")
+    m = CrawlEngine(spark, crawl_cfg, store, _settings()).run_round(0)
+    assert list(m["counters"]["phase_secs"]) == [
+        "state_load", "candidates_count", "fetch_write", "fetch_stats_collect",
+        "write_seen", "frontier_write", "extract",
+    ]
 
-    a = {tuple(r) for r in store_a.read_union("url_seen", store_a.latest_round()).collect()}
-    t = {tuple(r) for r in store_t.read_union("url_seen", store_t.latest_round()).collect()}
-    assert a == t
 
+def test_cli_resume_ignores_retired_gate_and_transport_keys(spark, tmp_path, capsys):
+    """A store written when the seen gate and the span wire format were
+    settable still resumes: config.json keys for them (and a leftover
+    cuckoo/ snapshot dir) are ignored, and the resumed crawl lands on the
+    same url_seen set and documents as an uninterrupted run."""
+    import json as _json
+
+    from ba_gepris_crawler_spark.cli import main as cli_main
+
+    flags = ["--projects", "100", "--hosts", "2", "--buckets", "4"]
+    full, resumed = tmp_path / "full", tmp_path / "resumed"
+    assert cli_main(["new-crawl", str(full), *flags, "--max-rounds", "30"]) == 0
+    assert cli_main(["new-crawl", str(resumed), *flags, "--max-rounds", "2"]) == 0
+    cfg = _json.load(open(resumed / "config.json"))
+    cfg.update(seen_filter="cuckoo", cuckoo_mode="distributed", span_transport="arrow")
+    _json.dump(cfg, open(resumed / "config.json", "w"))
+    (resumed / "cuckoo").mkdir()
+    (resumed / "cuckoo" / "latest.json").write_text('{"round": 1, "path": "r1-g0"}')
+    assert cli_main(["resume-crawl", str(resumed), "--max-rounds", "30"]) == 0
+    out = [_json.loads(l) for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
+    assert out[-1]["done"]
+
+    stores = [SnapshotStore(spark, r) for r in (full, resumed)]
+    seen = [{tuple(r) for r in st.read_union("url_seen", st.latest_round()).collect()}
+            for st in stores]
+    assert seen[0] == seen[1]
     cols = ["doc_id", "url", "round", "status", "spans"]
-    da = {(r.doc_id, r.url, r.round, r.status, str(r.spans))
-          for r in store_a.read_union("documents", store_a.latest_round()).select(*cols).collect()}
-    dt = {(r.doc_id, r.url, r.round, r.status, str(r.spans))
-          for r in store_t.read_union("documents", store_t.latest_round()).select(*cols).collect()}
-    assert da == dt  # span sequences byte-equal across transports
-
-
-def test_fetch_rejects_unknown_span_transport(spark, crawl_cfg):
-    """An unrecognized span_transport must raise, not silently fall back to
-    the slowest in-band 'arrow' path — a typo'd 'array' would be a silent
-    ~2x regression that an A/B run then misattributes (review r5 #8)."""
-    from ba_gepris_crawler_spark.operators.fetch import fetch_pages
-    from ba_gepris_crawler_spark.operators.frontier import seed_frontier
-    from ba_gepris_crawler_spark.operators.politeness import (
-        PolitenessConfig,
-        schedule_round,
-    )
-
-    fetch_now, _ = schedule_round(seed_frontier(spark, crawl_cfg), PolitenessConfig(), 2)
-    with pytest.raises(ValueError, match="span_transport"):
-        fetch_pages(fetch_now, crawl_cfg, 10.0, 2, span_transport="array")
+    docs = [{(r.doc_id, r.url, r.round, r.status, str(r.spans))
+             for r in st.read_union("documents", st.latest_round()).select(*cols).collect()}
+            for st in stores]
+    assert docs[0] == docs[1]
 
 
 def test_tiered_compaction_logarithmic_merge(spark, tmp_path):
@@ -798,8 +799,8 @@ def test_bloom_n_items_exact_across_bootstrap_and_resume(spark, crawl_cfg, tmp_p
 
 def test_bloom_snapshot_never_overwrites_live_slot(spark, tmp_path):
     """save_bloom must write a fresh generation file and swap the manifest
-    LAST (the save_cuckoo discipline): overwriting the live bits slot in
-    place left a crash window where new bits (possibly a resized m) paired
+    LAST (a fresh generation file per save): overwriting the live bits
+    slot in place left a crash window where new bits (possibly a resized m) paired
     with stale meta — same round tag after a --from-round rewind, wrong m,
     and every probe reads garbage positions, turning seen URLs 'provably
     unseen' (review r5 store #2)."""

@@ -5,7 +5,6 @@ nondeterministic, so trace equality is out of scope by design)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from ba_gepris_crawler_spark.operators.politeness import PolitenessConfig
@@ -118,24 +117,9 @@ def test_streaming_session_gated_site_matches_batch(spark, tmp_path):
     assert all(st != 401 for _, st in stream_seen)
 
 
-def test_stream_crawl_cli_rejects_cuckoo_before_spark(capsys):
-    """--seen-filter cuckoo has no stream analog: the CLI must fail the
-    pure-argparse check BEFORE paying SparkSession startup (and before
-    touching the root directory)."""
-    from ba_gepris_crawler_spark.cli import main
-
-    assert main(["stream-crawl", "/tmp/never-created-stream-root",
-                 "--seen-filter", "cuckoo"]) == 2
-    assert "batch-engine only" in capsys.readouterr().out
-    import os
-
-    assert not os.path.exists("/tmp/never-created-stream-root")
-
-
-@pytest.mark.parametrize("seen_filter", ["exact", "bloom"])
-def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path, seen_filter):
-    """seen_filter='bloom' runs the SAME crawl through the incremental
-    bloom pre-gate + exact backstop (derived from committed batch dirs):
+def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path):
+    """The stream runs the SAME crawl through the incremental bloom
+    pre-gate + exact backstop (derived from committed batch dirs):
     identical final state, every url fetched exactly once — a bloom false
     NEGATIVE (impossible for inserted committed dirs) would show up here
     as a duplicate fetch."""
@@ -147,19 +131,17 @@ def test_streaming_crawl_matches_batch_seen_set(spark, tmp_path, seen_filter):
     )
     pol = PolitenessConfig(per_host_rate=40, round_seconds=1.0, max_in_flight=5)
 
-    sc = StreamingCrawl(spark, cfg, tmp_path / "stream", politeness=pol, n_buckets=8,
-                        seen_filter=seen_filter, bloom_expected_items=10_000)
+    sc = StreamingCrawl(spark, cfg, tmp_path / "stream", politeness=pol, n_buckets=8)
     sc.seed()
     waves = sc.drain(max_waves=20)
     assert 1 < waves <= 20  # discovery actually fed the stream back
-    if seen_filter == "bloom":
-        # the gate really ran: bitmap built and every committed url_seen
-        # batch dir inserted exactly once
-        assert sc._bloom is not None
-        assert sc._bloom_dirs == {
-            p.name for p in (sc.root / "url_seen").glob("b*")
-            if (sc.root / "_commits" / p.name).exists()
-        }
+    # the gate really ran: bitmap built and every committed url_seen
+    # batch dir inserted exactly once
+    assert sc._bloom is not None
+    assert sc._bloom_dirs == {
+        p.name for p in (sc.root / "url_seen").glob("b*")
+        if (sc.root / "_commits" / p.name).exists()
+    }
 
     store = SnapshotStore(spark, tmp_path / "batch")
     CrawlEngine(
@@ -200,8 +182,7 @@ def test_streaming_bloom_gate_rebuilds_across_restart(spark, tmp_path):
     pol = PolitenessConfig(per_host_rate=30, round_seconds=1.0, max_in_flight=5)
     root = tmp_path / "stream"
 
-    sc1 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4,
-                         seen_filter="bloom", bloom_expected_items=5_000)
+    sc1 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4)
     sc1.seed()
     assert sc1.drain(max_waves=2) == 2  # stop mid-crawl: frontier not drained
     done_dirs = {p.name for p in (root / "url_seen").glob("b*")
@@ -209,8 +190,7 @@ def test_streaming_bloom_gate_rebuilds_across_restart(spark, tmp_path):
     assert done_dirs  # some batches committed before the "crash"
 
     # restart: fresh instance, no in-memory bloom; finish the crawl
-    sc2 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4,
-                         seen_filter="bloom", bloom_expected_items=5_000)
+    sc2 = StreamingCrawl(spark, cfg, root, politeness=pol, n_buckets=4)
     assert not sc2.needs_seed()
     sc2.drain(max_waves=20)
     assert done_dirs <= sc2._bloom_dirs  # pre-crash dirs re-ORed on restart

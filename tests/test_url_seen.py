@@ -12,20 +12,27 @@ def _urls(spark, n, prefix="https://h.example.org/p"):
     return spark.range(n).select(F.concat(F.lit(prefix), F.col("id")).alias("url"))
 
 
+def _n_maybe_seen(frontier, bloom) -> tuple[int, int]:
+    """(definitely-new, maybe-seen) row counts of the flagged frame."""
+    flagged = US.flag_by_bloom(frontier, bloom)
+    n_maybe = flagged.filter(F.col("_maybe_seen")).count()
+    return flagged.count() - n_maybe, n_maybe
+
+
 def test_bloom_no_false_negatives(spark):
     seen = _urls(spark, 5000)
     bloom = US.build_bloom(seen, fpp=0.01)
-    definitely_new, maybe_seen = US.split_by_bloom(seen, bloom)
-    assert definitely_new.count() == 0  # every seen url must test positive
-    assert maybe_seen.count() == 5000
+    n_new, n_maybe = _n_maybe_seen(seen, bloom)
+    assert n_new == 0  # every seen url must test positive
+    assert n_maybe == 5000
 
 
 def test_bloom_fpp_in_range(spark):
     seen = _urls(spark, 5000)
     bloom = US.build_bloom(seen, fpp=0.01)
     fresh = _urls(spark, 20000, prefix="https://other.example.org/q")
-    _, maybe = US.split_by_bloom(fresh, bloom)
-    fp_rate = maybe.count() / 20000
+    _, n_maybe = _n_maybe_seen(fresh, bloom)
+    fp_rate = n_maybe / 20000
     assert fp_rate < 0.05, fp_rate  # target 1%, generous bound
 
 
@@ -78,22 +85,21 @@ def test_new_urls_exact_path_has_no_seen_side_shuffle_aggregate(spark):
 
 
 def test_bloom_broadcast_reused_and_released(spark):
-    """One bitmap broadcast PER MODEL, reused across split calls, released
+    """One bitmap broadcast PER MODEL, reused across probe calls, released
     by unpersist_broadcast(): the old per-call broadcast was never cleaned
     up — rounds x bitmap-size of executor memory leaked over a long crawl
     (review r5 engine #4)."""
     seen = _urls(spark, 200).withColumn("round", F.lit(0))
     bloom = US.build_bloom(seen, fpp=0.01)
     frontier = _urls(spark, 50)
-    US.split_by_bloom(frontier, bloom)
+    US.flag_by_bloom(frontier, bloom)
     bc1 = bloom._bc
-    US.split_by_bloom(frontier, bloom)
+    US.flag_by_bloom(frontier, bloom)
     assert bloom._bc is bc1  # reused, not re-broadcast
     bloom.unpersist_broadcast()
     assert bloom._bc is None
     # a released model still works (lazy re-broadcast on next use)
-    d, m = US.split_by_bloom(frontier, bloom)
-    assert d.count() + m.count() == 50
+    assert sum(_n_maybe_seen(frontier, bloom)) == 50
     bloom.unpersist_broadcast()
 
 
